@@ -305,20 +305,6 @@ def _extra_benches():
         cents = spark.read.parquet(cent_path)
         return semdedup_pairs(emb, threshold=0.9, centroids=cents)
 
-    def neardup_clusters_star(spark, sf_dir):
-        # r5: same pipeline through large-star/small-star contraction —
-        # the variant whose round count is O(log n) instead of graph
-        # diameter (tests prove label-prop ≡ star on the same pairs).
-        from salesforce_postgresql_etl_spark.operators.clustering import (
-            connected_components_star,
-        )
-
-        docs = load(spark, sf_dir, "documents")
-        pairs = neardup_pairs(
-            docs, threshold=NEARDUP_THRESHOLD, strategy="minhash", persist=True
-        ).select("doc_a", "doc_b")
-        return connected_components_star(pairs)
-
     return {
         "q_neardup_cross_lsh": neardup_cross_lsh,
         "q_neardup_minhash": neardup_minhash,
@@ -326,7 +312,6 @@ def _extra_benches():
         "q_simsearch_ivf": simsearch_ivf,
         "q_neardup_embed_lsh": neardup_embed_lsh,
         "q_neardup_clusters_lsh": neardup_clusters_lsh,
-        "q_neardup_clusters_star": neardup_clusters_star,
         "q_simsearch_pq": simsearch_pq,
         "q_semdedup": semdedup,
     }

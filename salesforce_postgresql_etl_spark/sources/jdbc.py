@@ -24,6 +24,8 @@ lowercase column names.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 
 
@@ -100,6 +102,35 @@ def _merge_sql(table: str, staging: str, cols: list[str], key_cols: list[str]) -
     )
 
 
+# dialect → server-side merge statement builder (table, staging, cols, keys)
+_MERGE_SQL = {"postgresql": _upsert_sql, "ansi": _merge_sql}
+
+
+def _merge_builder(dialect: str):
+    """The dialect's merge builder; an unknown dialect raises before any
+    write happens."""
+    try:
+        return _MERGE_SQL[dialect]
+    except KeyError:
+        raise ValueError(f"unknown dialect: {dialect!r}") from None
+
+
+@contextmanager
+def _connect(spark, url: str, props: dict):
+    """A JDBC connection from the JVM DriverManager, closed on exit —
+    how the server-side statements run (Spark's JDBC API only reads and
+    writes DataFrames)."""
+    jvm = spark._jvm
+    jprops = jvm.java.util.Properties()
+    for k, v in props.items():
+        jprops.setProperty(k, v)
+    conn = jvm.java.sql.DriverManager.getConnection(url, jprops)
+    try:
+        yield conn
+    finally:
+        conn.close()
+
+
 def upsert(
     df: DataFrame,
     url: str,
@@ -112,34 +143,14 @@ def upsert(
 
     ``dialect``: ``postgresql`` → ON CONFLICT; ``ansi`` → MERGE INTO.
     """
-    if dialect == "postgresql":
-        merge_stmt = _upsert_sql
-    elif dialect == "ansi":
-        merge_stmt = _merge_sql
-    else:
-        raise ValueError(f"unknown dialect: {dialect!r}")
+    merge_stmt = _merge_builder(dialect)
     staging = f"{_validate_table(table)}__staging"
-    (
-        df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", staging)
-        .options(**props)
-        .mode("overwrite")
-        .save()
-    )
-    # One server-side MERGE statement via the JVM DriverManager.
-    jvm = df.sparkSession._jvm
-    jprops = jvm.java.util.Properties()
-    for k, v in props.items():
-        jprops.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(url, jprops)
-    try:
+    write_full(df, url, staging, props)
+    with _connect(df.sparkSession, url, props) as conn:
         stmt = conn.createStatement()
         stmt.execute(merge_stmt(table, staging, df.columns, key_cols))
         stmt.execute(f"DROP TABLE {staging}")
         stmt.close()
-    finally:
-        conn.close()
 
 
 def read_partitioned(
@@ -244,22 +255,10 @@ def apply_cdc(
     idempotent (re-applying the same feed is a no-op), and the network
     cost is the CHANGE SET, never the table.
     """
-    if dialect == "postgresql":
-        merge_stmt = _upsert_sql
-    elif dialect == "ansi":
-        merge_stmt = _merge_sql
-    else:
-        raise ValueError(f"unknown dialect: {dialect!r}")
+    merge_stmt = _merge_builder(dialect)
     payload_cols = [c for c in changes.columns if c != "change_type"]
     staging = f"{_validate_table(table)}__cdc_staging"
-    (
-        changes.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", staging)
-        .options(**props)
-        .mode("overwrite")
-        .save()
-    )
+    write_full(changes, url, staging, props)
     # no DELETE alias (Derby rejects one) — qualify with the table name
     on = " AND ".join(f"{table}.{_q(c)} = s.{_q(c)}" for c in key_cols)
     # Spark's JDBC writer quotes lowercase names, and maps StringType to
@@ -273,12 +272,7 @@ def apply_cdc(
         f"SELECT {', '.join(_q(c) for c in payload_cols)} FROM {staging} "
         f"WHERE {ct} IN ('insert', 'update')"
     )
-    jvm = changes.sparkSession._jvm
-    jprops = jvm.java.util.Properties()
-    for k, v in props.items():
-        jprops.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(url, jprops)
-    try:
+    with _connect(changes.sparkSession, url, props) as conn:
         stmt = conn.createStatement()
         try:
             stmt.execute(delete_stmt)
@@ -307,5 +301,3 @@ def apply_cdc(
                 except Exception:
                     pass
             stmt.close()
-    finally:
-        conn.close()

@@ -37,7 +37,7 @@ SF_TYPE_MAP: dict[str, tuple[T.DataType, str]] = {
     "picklist": (T.StringType(), "varchar"),
     "multipicklist": (T.ArrayType(T.StringType()), "text"),
     "boolean": (T.BooleanType(), "boolean"),
-    "int": (T.LongType(), "integer"),
+    "int": (T.LongType(), "bigint"),
     "double": (T.DoubleType(), "double precision"),
     "percent": (T.DoubleType(), "double precision"),
     "currency": (T.DecimalType(18, 2), "numeric(18,2)"),

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+import salesforce_postgresql_etl_spark.operators.clustering as C
 from salesforce_postgresql_etl_spark.operators.clustering import (
     connected_components,
     dedup_clusters,
@@ -12,6 +13,7 @@ from salesforce_postgresql_etl_spark.operators.clustering import (
 from salesforce_postgresql_etl_spark.operators.dedup import neardup_pairs
 from salesforce_postgresql_etl_spark.sources import load
 
+from .cc_oracle import union_find
 from .conftest import SF_DIR_TINY
 
 
@@ -37,14 +39,6 @@ def test_long_chain_converges(spark):
     )
     got = _comp_map(connected_components(edges))
     assert set(got.values()) == {0}
-
-
-def test_max_iters_raises(spark):
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(12)], "doc_a long, doc_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_iters=2)
 
 
 def test_dedup_clusters_canonical(spark):
@@ -193,166 +187,126 @@ def test_clusters_lsh_equals_brute(spark):
     assert len(cb) > 0
 
 
-# ---------------------------------------------------------------------------
-# Large-star/small-star contraction (the O(log n)-round scale variant)
-# ---------------------------------------------------------------------------
-from salesforce_postgresql_etl_spark.operators.clustering import (  # noqa: E402
-    connected_components_star,
-)
+def _zigzag(base, n):
+    """Path base, base+n, base+1, base+n+1, base+2, ...: every low id is
+    a local minimum, so one contraction round leaves the low chain
+    base..base+n-1 (n-1 edges) — edges that survive round 1."""
+    return [
+        e
+        for i in range(n - 1)
+        for e in ((base + i, base + n + i), (base + n + i, base + i + 1))
+    ]
 
 
-def test_star_chain_and_triangle(spark):
-    edges = spark.createDataFrame(
-        [(2, 1), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
-        "doc_a long, doc_b long",
-    )
-    got = _comp_map(connected_components_star(edges))
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-
-
-def test_star_beats_diameter_on_long_chain(spark):
-    # Path 0-1-...-63: min-label needs ~63 rounds (diameter); star
-    # contraction must finish in far fewer — the entire point.
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
-    )
-    stats = {}
-    got = _comp_map(connected_components_star(edges, stats=stats))
-    assert set(got.values()) == {0}
-    assert len(got) == 64
-    assert stats["rounds"] <= 10  # observed 4-6; 63 would be diameter-bound
-
-
-def test_star_equals_labelprop_on_random_graph(spark):
+def test_random_graph_equals_union_find(spark):
     import random
 
     rng = random.Random(5)
-    edges = spark.createDataFrame(
-        [(rng.randrange(80), rng.randrange(80)) for _ in range(60)],
-        "doc_a long, doc_b long",
-    )
-    # Includes self-loops (randrange can draw u == v): since r7 the
-    # star variant labels self-loop-only nodes too, so the raw graphs
-    # must agree with no loop-stripping preprocessing.
-    assert _comp_map(connected_components_star(edges)) == _comp_map(
-        connected_components(edges)
-    )
-
-
-def test_star_equals_labelprop_on_lsh_pairs(spark):
-    docs = load(spark, SF_DIR_TINY, "documents")
-    pairs = neardup_pairs(docs, threshold=0.5)
-    assert _comp_map(connected_components_star(pairs)) == _comp_map(
-        connected_components(pairs)
-    )
+    rows = [(rng.randrange(80), rng.randrange(80)) for _ in range(60)]
+    edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
+    # Includes self-loops (randrange can draw u == v): a self-loop-only
+    # node is labeled by itself, exactly as union-find labels it.
+    assert _comp_map(connected_components(edges)) == union_find(rows)
 
 
 # ---------------------------------------------------------------------------
-# Contraction variant (r7, VERDICT r6 #2 — the edge list shrinks per round)
+# Contraction loop (r7, VERDICT r6 #2 — the edge list shrinks per round).
+# Tests that exercise the Spark rounds pin the loop by zeroing the
+# local-finish gate; the default gate absorbs every graph this small.
 # ---------------------------------------------------------------------------
-from salesforce_postgresql_etl_spark.operators.clustering import (  # noqa: E402
-    connected_components_contract,
-)
 
 
-def test_contract_chain_and_triangle(spark):
+def test_contract_chain_and_triangle(spark, monkeypatch):
+    monkeypatch.setattr(C, "_CC_LOCAL_FINISH_ROWS", 0)
     edges = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
         "doc_a long, doc_b long",
     )
-    got = _comp_map(connected_components_contract(edges))
+    stats = {}
+    got = _comp_map(connected_components(edges, stats=stats))
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
+    assert stats["rounds"] >= 1 and "local_finish" not in stats
 
 
 def test_contract_logarithmic_on_long_chain(spark, monkeypatch):
     # Path 0-1-...-63: the pointer-jumped mapping must halve the chain
-    # per round — diameter-bound would be ~63 rounds. Loop path pinned
-    # (r14): the local-finish gate would otherwise absorb this graph.
-    import salesforce_postgresql_etl_spark.operators.clustering as C
-
+    # per round — diameter-bound would be ~63 rounds.
     monkeypatch.setattr(C, "_CC_LOCAL_FINISH_ROWS", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "doc_a long, doc_b long"
     )
     stats = {}
-    got = _comp_map(connected_components_contract(edges, stats=stats))
+    got = _comp_map(connected_components(edges, stats=stats))
     assert set(got.values()) == {0}
     assert len(got) == 64
     assert stats["rounds"] <= 10
 
 
-def test_contract_keeps_selfloop_only_nodes(spark):
-    # Drop-in parity across ALL THREE engines: a node whose only edge
-    # is a self-loop is still returned, labeled by itself (the star
-    # variant builds its node set from the RAW pairs, since _canon
-    # strips self-loops — r7 review finding).
+def test_contract_keeps_selfloop_only_nodes(spark, monkeypatch):
+    # A node whose only edge is a self-loop is still returned, labeled
+    # by itself — by the finish on entry and by the pinned loop alike.
     edges = spark.createDataFrame(
         [(7, 7), (1, 2)], "doc_a long, doc_b long"
     )
-    got = _comp_map(connected_components_contract(edges))
+    got = _comp_map(connected_components(edges))
     assert got == {1: 1, 2: 1, 7: 7}
-    assert got == _comp_map(connected_components(edges))
-    assert got == _comp_map(connected_components_star(edges))
+    monkeypatch.setattr(C, "_CC_LOCAL_FINISH_ROWS", 0)
+    assert _comp_map(connected_components(edges)) == got
 
 
 def test_contract_converges_in_exactly_max_iters(spark, monkeypatch):
     # A single edge contracts to nothing in ONE round; max_iters=1 must
     # therefore succeed (the old for/else discovered emptiness a round
     # late and raised spuriously — r7 review finding), and a chain that
-    # genuinely needs more rounds must still raise. Loop path pinned
-    # (r14): max_iters is a LOOP property the local finish never hits.
-    import salesforce_postgresql_etl_spark.operators.clustering as C
-
+    # genuinely needs more rounds must still raise. Loop path pinned:
+    # max_iters is a LOOP property the local finish never hits.
     monkeypatch.setattr(C, "_CC_LOCAL_FINISH_ROWS", 0)
     one = spark.createDataFrame([(1, 2)], "doc_a long, doc_b long")
-    assert _comp_map(connected_components_contract(one, max_iters=1)) == {
-        1: 1, 2: 1,
-    }
+    assert _comp_map(connected_components(one, max_iters=1)) == {1: 1, 2: 1}
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components_contract(chain, max_iters=0)
+        connected_components(chain, max_iters=0)
 
 
 def test_contract_empty_pairs(spark):
     edges = spark.createDataFrame([], "doc_a long, doc_b long")
-    assert _comp_map(connected_components_contract(edges)) == {}
+    assert _comp_map(connected_components(edges)) == {}
 
 
-def test_contract_equals_labelprop_on_random_graph(spark):
+def test_contract_equals_labelprop_on_random_graph(spark, monkeypatch):
+    # min-label contract checked against the union-find oracle, on the
+    # default path (finish on entry) and on the pinned loop
     import random
 
     rng = random.Random(11)
-    edges = spark.createDataFrame(
-        [(rng.randrange(80), rng.randrange(80)) for _ in range(60)],
-        "doc_a long, doc_b long",
-    )
-    assert _comp_map(connected_components_contract(edges)) == _comp_map(
-        connected_components(edges)
-    )
+    rows = [(rng.randrange(80), rng.randrange(80)) for _ in range(60)]
+    edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
+    want = union_find(rows)
+    assert _comp_map(connected_components(edges)) == want
+    monkeypatch.setattr(C, "_CC_LOCAL_FINISH_ROWS", 0)
+    assert _comp_map(connected_components(edges)) == want
 
 
 def test_contract_equals_labelprop_on_lsh_pairs(spark):
     docs = load(spark, SF_DIR_TINY, "documents")
-    pairs = neardup_pairs(docs, threshold=0.5)
-    assert _comp_map(connected_components_contract(pairs)) == _comp_map(
-        connected_components(pairs)
-    )
+    pairs = neardup_pairs(docs, threshold=0.5).select("doc_a", "doc_b")
+    rows = [tuple(r) for r in pairs.collect()]
+    assert rows
+    assert _comp_map(connected_components(pairs)) == union_find(rows)
 
 
 def test_contract_edge_telemetry_shrinks_geometrically(spark, monkeypatch):
     # stats['edges_per_round'] is the scale claim as data: round 1 is
     # the input pair count; every later round must be a small fraction
     # of its predecessor (measured 190,925 -> 229 -> 2 at sf0.1; the
-    # tiny fixture shows the same shape). Loop path pinned (r14).
-    import salesforce_postgresql_etl_spark.operators.clustering as C
-
+    # tiny fixture shows the same shape). Loop path pinned.
     monkeypatch.setattr(C, "_CC_LOCAL_FINISH_ROWS", 0)
     docs = load(spark, SF_DIR_TINY, "documents")
     pairs = neardup_pairs(docs, threshold=0.5)
     stats = {}
-    connected_components_contract(pairs, stats=stats).collect()
+    connected_components(pairs, stats=stats).collect()
     counts = stats["edges_per_round"]
     assert counts[0] == pairs.count()
     assert len(counts) == stats["rounds"]
@@ -361,7 +315,8 @@ def test_contract_edge_telemetry_shrinks_geometrically(spark, monkeypatch):
 
 
 # --------------------------------------------------------------------
-# r14: tight-regime local finish (one-crossing Arrow union-find)
+# Local finish (one-crossing NumPy labeling): on entry for graphs under
+# the gate, mid-loop once contraction brings a graph under it.
 # --------------------------------------------------------------------
 
 
@@ -369,8 +324,6 @@ def test_local_finish_engages_and_equals_loop(spark, monkeypatch):
     # Adversarial mix: long chain (pointer-jump stressor), cliques,
     # self-loops, duplicate + reversed edges, a self-loop-only node.
     import random
-
-    import salesforce_postgresql_etl_spark.operators.clustering as C
 
     rng = random.Random(29)
     rows = (
@@ -380,36 +333,74 @@ def test_local_finish_engages_and_equals_loop(spark, monkeypatch):
     )
     edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
     stats = {}
-    got = _comp_map(connected_components_contract(edges, stats=stats))
+    got = _comp_map(connected_components(edges, stats=stats))
     assert stats.get("local_finish") is True
     assert stats["rounds"] == 0 and stats["edges_per_round"] == [len(rows)]
-    # identical to the pinned loop engine and to label-prop
+    # identical to the pinned loop and to the union-find oracle
     monkeypatch.setattr(C, "_CC_LOCAL_FINISH_ROWS", 0)
     stats2 = {}
-    loop = _comp_map(connected_components_contract(edges, stats=stats2))
+    loop = _comp_map(connected_components(edges, stats=stats2))
     assert "local_finish" not in stats2
     assert got == loop
-    assert got == _comp_map(connected_components(edges))
+    assert got == union_find(rows)
     # chain labels all 0; self-loop-only node labels itself
     assert got[200] == 0 and got[5000] == 5000
 
 
-def test_local_finish_null_endpoints_keep_loop(spark):
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (None, 9)], "doc_a long, doc_b long"
-    )
+def test_local_finish_shuffled_id_path(spark):
+    # A path whose ids are shuffled: hooking only edge endpoints moves a
+    # label one hop per pass inside a tree (~100 passes here); hooking
+    # tree roots converges in a handful. Labels must equal union-find.
+    import random
+
+    ids = list(range(300))
+    random.Random(17).shuffle(ids)
+    rows = list(zip(ids, ids[1:]))
+    edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
     stats = {}
-    connected_components_contract(edges, stats=stats).collect()
-    assert "local_finish" not in stats  # NULLs gate the crossing away
+    got = _comp_map(connected_components(edges, stats=stats))
+    assert stats.get("local_finish") is True and stats["rounds"] == 0
+    assert got == union_find(rows)
+
+
+def test_local_finish_null_endpoints_keep_loop(spark, monkeypatch):
+    # NULL endpoints force round 1 into Spark, whose joins define their
+    # semantics (the NULL node comes back labeled NULL); the contracted
+    # remainder (the zigzag's low chain) then goes to the finish.
+    rows = [(1, 2), (2, 3), (None, 9)] + _zigzag(100, 20)
+    edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
+    stats = {}
+    got = _comp_map(connected_components(edges, stats=stats))
+    assert stats["rounds"] >= 1
+    assert stats.get("local_finish") is True
+    assert got[None] is None and got[3] == 1 and got[9] == 9
+    monkeypatch.setattr(C, "_CC_LOCAL_FINISH_ROWS", 0)
+    assert got == _comp_map(connected_components(edges))
+
+
+def test_local_finish_hands_off_mid_loop(spark, monkeypatch):
+    # Gate just below the input: round 1 runs in Spark, the cliques
+    # collapse to their minima and the zigzag to its low chain, and that
+    # remainder clears the gate — the finish labels it and its labels
+    # compose as the last mapping.
+    rows = _zigzag(0, 40) + [
+        (1000 + i, 1000 + j) for i in range(8) for j in range(i + 1, 8)
+    ]
+    monkeypatch.setattr(C, "_CC_LOCAL_FINISH_ROWS", 2 * len(rows) - 1)
+    edges = spark.createDataFrame(rows, "doc_a long, doc_b long")
+    stats = {}
+    got = _comp_map(connected_components(edges, stats=stats))
+    assert stats.get("local_finish") is True
+    assert stats["rounds"] >= 1
+    assert stats["edges_per_round"] == [len(rows), 39]
+    assert got == union_find(rows)
 
 
 def test_local_finish_on_lsh_pairs_equals_loop(spark, monkeypatch):
-    import salesforce_postgresql_etl_spark.operators.clustering as C
-
     docs = load(spark, SF_DIR_TINY, "documents")
     pairs = neardup_pairs(docs, threshold=0.5)
     stats = {}
-    got = _comp_map(connected_components_contract(pairs, stats=stats))
+    got = _comp_map(connected_components(pairs, stats=stats))
     assert stats.get("local_finish") is True
     monkeypatch.setattr(C, "_CC_LOCAL_FINISH_ROWS", 0)
-    assert got == _comp_map(connected_components_contract(pairs))
+    assert got == _comp_map(connected_components(pairs))

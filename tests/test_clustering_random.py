@@ -1,16 +1,17 @@
-"""Seeded randomized UNION-FIND differential for all three connected-
-components strategies (operators/clustering.py: label propagation,
-star contraction, edge contraction).
+"""Seeded randomized UNION-FIND differential for every path of
+``operators.clustering.connected_components``: the local finish on
+entry (default gate), the contraction loop pinned in Spark
+(``_CC_LOCAL_FINISH_ROWS = 0``), and the loop with a mid-loop hand-off
+(gate just below the input, so round 1 runs in Spark and the finish
+takes whatever it leaves).
 
-The existing random-graph tests compare the strategies to EACH OTHER
-— a shared semantic bug would agree with itself. This sweep compares
-each against an independent driver-side union-find oracle (the
-textbook algorithm, ~15 lines, no Spark) on three adversarial graph
-families: sparse uniform (self-loops included), chain-heavy (long
-paths with random chords — the diameter stressor), and dense blobs
-bridged by single edges (the hub/merge stressor). Component label
-contract: the MINIMUM node id in the component. Seeded
-``random.Random``; failures print the seed and family.
+Each path is compared against an independent driver-side union-find
+oracle (tests/cc_oracle.py — the textbook algorithm, no Spark) on three
+adversarial graph families: sparse uniform (self-loops included),
+chain-heavy (long paths with random chords — the diameter stressor),
+and dense blobs bridged by single edges (the hub/merge stressor).
+Component label contract: the MINIMUM node id in the component. Seeded
+``random.Random``; failures print the seed, family and path.
 """
 
 from __future__ import annotations
@@ -24,35 +25,12 @@ import pytest
 # each round).
 pytestmark = pytest.mark.slow
 
+import salesforce_postgresql_etl_spark.operators.clustering as C
 from salesforce_postgresql_etl_spark.operators.clustering import (
     connected_components,
-    connected_components_contract,
-    connected_components_star,
 )
 
-
-def _union_find(edges):
-    parent = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    comps = {}
-    for node in list(parent):
-        comps.setdefault(find(node), []).append(node)
-    return {
-        node: min(members)
-        for members in comps.values()
-        for node in members
-    }
+from .cc_oracle import union_find
 
 
 def _sparse(rng):
@@ -64,7 +42,7 @@ def _sparse(rng):
 
 
 def _chains(rng):
-    """Several long paths (diameter up to ~35 — labelprop's stressor)
+    """Several long paths (diameter up to ~35 — the pointer-jump stressor)
     plus a few random chords that may splice them."""
     edges, base = [], 0
     for _ in range(rng.randint(2, 4)):
@@ -77,8 +55,8 @@ def _chains(rng):
 
 
 def _blobs(rng):
-    """Dense cliques bridged by single edges — the star/contract
-    hub-merge stressor."""
+    """Dense cliques bridged by single edges — the hub-merge
+    stressor."""
     edges, base, anchors = [], 0, []
     for _ in range(rng.randint(3, 5)):
         size = rng.randint(4, 9)
@@ -95,26 +73,40 @@ def _blobs(rng):
 
 
 _FAMILIES = {"sparse": _sparse, "chains": _chains, "blobs": _blobs}
-_STRATEGIES = {
-    "labelprop": connected_components,
-    "star": connected_components_star,
-    "contract": connected_components_contract,
+# path name → local-finish gate for an n-edge input
+_PATHS = {
+    "entry": lambda n: C._CC_LOCAL_FINISH_ROWS,
+    "loop": lambda n: 0,
+    "handoff": lambda n: 2 * n - 1,
 }
 
 
 @pytest.mark.parametrize("seed", [3, 41, 107])
 @pytest.mark.parametrize("family", sorted(_FAMILIES))
-def test_cc_strategies_match_union_find(spark, seed, family):
+def test_cc_paths_match_union_find(spark, monkeypatch, seed, family):
     # NOT hash(family): str hash is per-process randomized — the seed
     # must reproduce across runs
     rng = random.Random(seed * 1000 + sum(family.encode()))
     edges = _FAMILIES[family](rng)
-    want = _union_find(edges)
+    want = union_find(edges)
     df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    for sname, fn in _STRATEGIES.items():
-        got = {r.node: r.comp for r in fn(df).collect()}
+    gates = {p: gate(len(edges)) for p, gate in _PATHS.items()}
+    for path, gate in gates.items():
+        monkeypatch.setattr(C, "_CC_LOCAL_FINISH_ROWS", gate)
+        stats = {}
+        labels = connected_components(df, stats=stats)
+        got = {r.node: r.comp for r in labels.collect()}
         assert got == want, (
-            f"seed {seed} family {family} strategy {sname}: "
+            f"seed {seed} family {family} path {path}: "
             f"{len(edges)} edges — first diffs "
             f"{dict(list({k: (got.get(k), want.get(k)) for k in set(got) | set(want) if got.get(k) != want.get(k)}.items())[:5])!r}"
         )
+        finished = stats.get("local_finish", False)
+        if path == "entry":
+            assert finished and stats["rounds"] == 0
+        elif path == "loop":
+            assert not finished and stats["rounds"] >= 1
+        else:
+            # the finish runs exactly when round 1 left edges behind
+            assert stats["rounds"] >= 1
+            assert finished == (len(stats["edges_per_round"]) > stats["rounds"])

@@ -33,8 +33,12 @@ def test_schema_mapping():
 
 
 def test_pg_ddl():
-    ddl = pg_ddl_from_describe("Opportunity", FIELDS)
+    ddl = pg_ddl_from_describe(
+        "Opportunity", FIELDS + [{"name": "NumberOfEmployees", "type": "int"}]
+    )
     assert '"id" varchar(18) NOT NULL' in ddl
+    # Spark reads SF int as LongType, so the column must hold 64 bits
+    assert '"numberofemployees" bigint' in ddl
     assert '"amount" numeric(18,2)' in ddl
     assert 'PRIMARY KEY ("id")' in ddl
 
